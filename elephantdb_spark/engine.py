@@ -33,6 +33,7 @@ import bisect
 import os
 import threading
 from collections import OrderedDict
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -75,6 +76,17 @@ SERVING_CACHE_CAP = 512
 #: memory at ~this value per probing thread.
 SERVING_BULK_DECODE_MAX = 32 << 20
 
+#: Cost rule for probing a decoded row group: bisect its sorted keys when
+#: ``len(wanted) * rows.bit_length() * SORTED_PROBE_COST <= rows``,
+#: otherwise hash the whole group with one ``pc.index_in``. Measured with
+#: pyarrow 16.1 on a shared 4-core x86 host, one 14,281-row group of
+#: lineitem keys, three runs: ``_probe_group`` by bisect cost 68-86 /
+#: 82-133 / 372-470 / 1120-1567 µs for 1 / 5 / 30 / 100 keys (~10 µs
+#: per key), by whole-group hashing 470-940 µs at any key count — a
+#: crossover at 50-64 keys, which this constant puts at
+#: 14,281 / (14 × 16) ≈ 64. Not a ``persistence_opts`` knob.
+SORTED_PROBE_COST = 16
+
 #: Cross-shard fanout width for the local serving probe (per Domain
 #: handle; override per domain with
 #: ``persistence_opts={"serving_fanout": N}``, 1 disables). The
@@ -106,6 +118,88 @@ def _shared_fanout_pool():
                     thread_name_prefix="edb-serve",
                 )
     return _FANOUT_POOL
+
+
+class _Group(NamedTuple):
+    """One decoded row group of the serving probe, cached or transient.
+
+    ``sorted_view`` is the key column's ``(offsets, data)`` buffers as
+    memoryviews (no copy) when the keys are non-decreasing, else None.
+    """
+
+    keys: object  # pa.ChunkedArray
+    values: object  # pa.ChunkedArray
+    nbytes: int
+    sorted_view: "tuple[memoryview, memoryview] | None"
+
+
+def _decoded_group(tbl) -> _Group:
+    """Build the group entry for a ``combine_chunks()``-ed key/value
+    table. The sortedness check is one vectorized compare, ~0.1 ms per
+    14k-row group, against a decode that costs tens of ms."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    keys = tbl.column("key")
+    view = None
+    n = len(keys)
+    if (
+        n
+        and keys.num_chunks == 1
+        and keys.null_count == 0
+        and keys.type == pa.binary()
+        and (n == 1 or pc.all(pc.less_equal(keys[:-1], keys[1:])).as_py())
+    ):
+        chunk = keys.chunk(0)
+        _, offsets, data = chunk.buffers()
+        view = (
+            memoryview(offsets).cast("i")[chunk.offset:chunk.offset + n + 1],
+            memoryview(data) if data is not None else memoryview(b""),
+        )
+    return _Group(keys, tbl.column("value"), int(tbl.nbytes), view)
+
+
+def _probe_group(group: _Group, wanted: "list[bytes]") -> "dict[bytes, bytes | None]":
+    """Look up the sorted, distinct ``wanted`` keys in one decoded group;
+    returns the hits, first occurrence per key (null values come back as
+    None). Exactly one ``pc.index_in`` per call: over the group's whole
+    key column, or — when the keys are sorted and the cost rule
+    (:data:`SORTED_PROBE_COST`) favours it — over only the
+    ``len(wanted)`` candidate rows found by bisect, O(w·log n) Python
+    steps. A miss is then a bisect plus an empty candidate match."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    want_arr = pa.array(wanted, type=pa.binary())
+    n = len(group.keys)
+    if (
+        group.sorted_view is not None
+        and len(wanted) * n.bit_length() * SORTED_PROBE_COST <= n
+    ):
+        offsets, data = group.sorted_view
+
+        def row_key(i: int) -> bytes:
+            return data[offsets[i]:offsets[i + 1]].tobytes()
+
+        rows = pa.array(
+            [
+                min(bisect.bisect_left(range(n), k, key=row_key), n - 1)
+                for k in wanted
+            ],
+            type=pa.int64(),
+        )
+        idx = pc.index_in(want_arr, value_set=group.keys.take(rows))
+        # a key present in the group is at its own candidate row, the
+        # leftmost row >= key: its first occurrence
+        vals = group.values.take(rows)
+    else:
+        idx = pc.index_in(want_arr, value_set=group.keys)
+        vals = pc.take(group.values, idx)
+    return {
+        k: v
+        for k, i, v in zip(wanted, idx.to_pylist(), vals.to_pylist())
+        if i is not None
+    }
 
 
 #: bulk_join auto-tuning (VERDICT r6 item 1): pick ``tasks_per_shard`` so
@@ -307,13 +401,14 @@ class Domain:
         self._dir_cache: "OrderedDict[str, list[str]]" = OrderedDict()
         self._pq_lock = threading.Lock()
         # decoded-row-group cache for the local serving probe: hot groups
-        # answer from in-memory Arrow arrays (a C-side hash probe) instead
-        # of re-decoding the group per call — the analogue of BDB JE's
-        # node cache the reference's serving layer sits on
+        # answer from in-memory Arrow arrays (a bisect over the sorted
+        # keys, see _probe_group) instead of re-decoding the group per
+        # call — the analogue of BDB JE's node cache the reference's
+        # serving layer sits on
         # (JavaBerkDB.java:70-82). Byte-bounded LRU; entries are immutable
         # (keyed by published-version file path + group index) and the
         # whole cache drops on version change with the other caches.
-        self._rg_cache: "OrderedDict[tuple[str, int], tuple]" = OrderedDict()
+        self._rg_cache: "OrderedDict[tuple[str, int], _Group]" = OrderedDict()
         self._rg_cache_nbytes = 0
         self._rg_cache_lock = threading.Lock()
         try:
@@ -1137,8 +1232,9 @@ class Domain:
                 # digest-subset assembly before the first per-group
                 # consult. When the cache could still absorb the file's
                 # smallest group, keep the r8 cache-first order: decoding
-                # a group once makes every later miss on it a single
-                # C-side hash probe, which the pre-filter would starve.
+                # a group once makes every later miss on it a bisect plus
+                # an empty candidate match, which the pre-filter would
+                # starve.
                 file_targets = targets
                 prefiltered = False
                 if bloom is not None:
@@ -1186,9 +1282,13 @@ class Domain:
                 for rg in sorted(by_rg):
                     wanted = sorted(set(by_rg[rg]))
                     # Decoded-group cache fast path: hot groups answer
-                    # from in-memory Arrow arrays (one C-side hash probe,
-                    # no I/O, no decode) — the BDB-JE-node-cache analogue
-                    # (JavaBerkDB.java:70-82). Cold CACHEABLE groups
+                    # from in-memory Arrow arrays (no I/O, no decode;
+                    # _probe_group bisects the sorted keys, O(w·log n)
+                    # Python steps plus one C call over w rows, and hashes
+                    # the whole group only for unsorted groups or batches
+                    # past the SORTED_PROBE_COST rule) — the
+                    # BDB-JE-node-cache analogue (JavaBerkDB.java:70-82).
+                    # Cold CACHEABLE groups
                     # (uncompressed ≤ budget/4, bounded decode) are read
                     # whole once and inserted; oversized groups keep the
                     # streaming early-exit path below unconditionally.
@@ -1212,8 +1312,8 @@ class Domain:
                     ):
                         # Bloom short-circuit (bloom.py), consulted ONLY
                         # when the alternative decode is UNPRODUCTIVE —
-                        # a hot cached group answers a miss with one
-                        # C-side hash probe (cheaper than any filter),
+                        # a hot cached group answers a miss with a
+                        # bisect (cheaper than any filter),
                         # and a cacheable group that still FITS the
                         # budget is worth decoding once even for a miss
                         # (every later miss on it is then free), so
@@ -1257,38 +1357,17 @@ class Domain:
                             tbl = pf.read_row_groups(
                                 [rg], columns=["key", "value"]
                             )
-                        tbl = tbl.combine_chunks()
+                        # bounded whole-group decode; when not
+                        # cacheable it is used WITHOUT retention: one C
+                        # call + probe beats the Arrow-batch streaming
+                        # loop, and at the 16 MiB layout cap the
+                        # transient is small; only pre-cap monoliths
+                        # (> the bulk bound) fall through to streaming
+                        cached = _decoded_group(tbl.combine_chunks())
                         if cacheable:
-                            cached = self._rg_cache_put(
-                                fpath,
-                                rg,
-                                tbl.column("key"),
-                                tbl.column("value"),
-                                tbl.nbytes,
-                            )
-                        else:
-                            # bounded whole-group decode WITHOUT
-                            # retention: one C call + vectorized probe
-                            # beats the Arrow-batch streaming loop, and
-                            # at the 16 MiB layout cap the transient is
-                            # small; only pre-cap monoliths (> the bulk
-                            # bound) fall through to streaming
-                            cached = (
-                                tbl.column("key"),
-                                tbl.column("value"),
-                                tbl.nbytes,
-                            )
+                            cached = self._rg_cache_put(fpath, rg, cached)
                     if cached is not None:
-                        karr, varr, _nb = cached
-                        idx = pc.index_in(
-                            pa.array(wanted, type=pa.binary()), value_set=karr
-                        )
-                        vals = pc.take(varr, idx).to_pylist()
-                        for kk, ii, vv in zip(
-                            wanted, idx.to_pylist(), vals
-                        ):
-                            if ii is not None:
-                                hits[kk] = vv
+                        hits.update(_probe_group(cached, wanted))
                         continue
                     # Stream the row group in bounded Arrow batches
                     # instead of materializing it whole (VERDICT r5
@@ -1456,7 +1535,7 @@ class Domain:
                 self._rg_cache.move_to_end((path, rg))
             return e
 
-    def _rg_cache_put(self, path: str, rg: int, karr, varr, nbytes: int):
+    def _rg_cache_put(self, path: str, rg: int, group: _Group) -> _Group:
         """Insert one decoded row group, evicting LRU entries past the
         byte budget. Two threads racing the same cold group both decode;
         the first insert wins and both use it (entries are immutable —
@@ -1465,12 +1544,11 @@ class Domain:
             key = (path, rg)
             e = self._rg_cache.get(key)
             if e is None:
-                e = (karr, varr, int(nbytes))
-                self._rg_cache[key] = e
-                self._rg_cache_nbytes += e[2]
+                e = self._rg_cache[key] = group
+                self._rg_cache_nbytes += e.nbytes
                 while self._rg_cache_nbytes > self._rg_cache_budget and self._rg_cache:
-                    _, (_, _, nb) = self._rg_cache.popitem(last=False)
-                    self._rg_cache_nbytes -= nb
+                    _, old = self._rg_cache.popitem(last=False)
+                    self._rg_cache_nbytes -= old.nbytes
             else:
                 self._rg_cache.move_to_end(key)
             return e
