@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import glob
 import os
+import struct
 
 import pytest
 from pyspark.sql import functions as F
@@ -48,6 +49,14 @@ def test_roundtrip_and_validation():
         BloomFilter.from_bytes(bf.to_bytes()[:-1])
     with pytest.raises(ValueError, match="fpp"):
         BloomFilter.build([b"a"], fpp=1.5)
+    # impossible headers: m = 0 (every probe would divide by zero), k > m
+    # (an unbounded (keys, k) position matrix) and k·m ≥ 2^64 (uint64
+    # positions would wrap); the first two have well-formed lengths
+    for m, k, nbits in [(0, 7, 0), (64, 65, 8), (1 << 40, 1 << 24, 0)]:
+        with pytest.raises(ValueError, match="header"):
+            BloomFilter.from_bytes(
+                struct.pack("<8sQIQ", b"EDBBLOOM", m, k, 1) + bytes(nbits)
+            )
 
 
 def test_add_batch_byte_identical_to_add_loop():
@@ -278,6 +287,28 @@ def test_corrupt_sidecar_degrades_gracefully(spark, bloom_root, tmp_path):
     assert dom.local_multi_get(keys) == expect
 
 
+def test_zero_width_sidecar_header_degrades_gracefully(spark, tmp_path):
+    """A sidecar whose header passes the length check but says m = 0 must
+    be refused at load, not fail every multi-get on its shard. The cache
+    is off so the file-level Bloom test runs on every probe."""
+    root = str(tmp_path / "domains" / "bz")
+    build_domain(
+        spark, _kv(spark), root,
+        DomainSpec(num_shards=4, persistence_opts={
+            "bloom_fpp": 0.01, "serving_cache_bytes": 0,
+        }),
+        version=1,
+    )
+    side = _sidecars(root, 1)[0]
+    with open(side, "wb") as fh:
+        fh.write(struct.pack("<8sQIQ", b"EDBBLOOM", 0, 7, 400))
+    dom = Engine(spark, os.path.dirname(root)).domain("bz")
+    keys = [f"k{i}".encode() for i in range(40)] + [b"none", b"k7x"]
+    expect = {f"k{i}".encode(): f"v{i}".encode() for i in range(40)}
+    expect[b"none"] = expect[b"k7x"] = None
+    assert dom.local_multi_get(keys) == expect
+
+
 def test_sidecar_build_idempotent(spark, bloom_root):
     vpath = os.path.join(bloom_root, "1")
     assert build_bloom_sidecars(spark, vpath, 0.01) == 0  # all present
@@ -344,6 +375,20 @@ def test_contains_batch_identical_to_scalar_might_contain(monkeypatch):
         monkeypatch.undo()
     assert bf.contains_batch([]) == []
     assert bf.contains_batch(iter(members[:5])) == [True] * 5
+    # the k extremes the one-pass broadcast must handle: a one-key
+    # filter (m = 64 clamp, k = 44), an fpp = 1e-6 filter (k = 20), and
+    # a blob that repeats one digest
+    one = BloomFilter.build([b"solo"], 0.01)
+    tight = BloomFilter.build(members, 1e-6)
+    assert (one.m, one.k, tight.k) == (64, 44, 20)
+    for f in (one, tight):
+        assert f.contains_batch(probes) == [f.might_contain(k) for k in probes]
+    assert one.contains_batch([b"solo"] * 3 + [b"x"] * 2) == [True] * 3 + [
+        one.might_contain(b"x")
+    ] * 2
+    assert tight.contains_digests(BloomFilter.hash_keys([b"absent"] * 4)) == [
+        tight.might_contain(b"absent")
+    ] * 4
 
 
 def test_bloom_gates_decodes_when_cache_cannot_absorb(spark, tmp_path, monkeypatch):
